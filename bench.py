@@ -4,10 +4,7 @@
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
-Optional: SPARK_GRAFT_BENCH_QUERIES=comma,list to subset;
-SPARK_GRAFT_BENCH_SCALING=1 additionally runs the flagship at local[8] vs
-local[32] and reports scaling efficiency (separate stderr lines; the stdout
-JSON line stays the driver contract).
+Optional: SPARK_GRAFT_BENCH_QUERIES=comma,list to subset.
 """
 
 from __future__ import annotations

@@ -115,8 +115,15 @@ def pip_join(
     <lon:double, lat:double>>) → (point_id, poly_name).
 
     Polygons are polyfilled at bbox level (cheap superset); exact membership
-    decided by the vectorized ray-cast grouped per polygon. ``fallback``
-    mimics the reference's left-join default; pass None for inner semantics.
+    decided by the vectorized ray-cast grouped per polygon.
+
+    ``fallback`` mimics the reference's left-join default and fixes the
+    output to exactly one row per ``point_id``: its containing polygon's
+    name, or ``fallback`` when none contains it. This assumes polygon
+    interiors are disjoint; where two polygons do contain a point, the
+    greater name wins. Pass None for inner semantics: one row per (point,
+    containing polygon), so overlapping polygons can emit several rows per
+    point.
     """
     ring_lon = F.transform(F.col("ring"), lambda p: p["lon"])
     ring_lat = F.transform(F.col("ring"), lambda p: p["lat"])

@@ -14,9 +14,23 @@ only +,-,*,/,% on BIGINT/DOUBLE, floor, CASE, ||, CAST AS STRING/BIGINT/
 INT/DOUBLE, md5, substr, length, lower/upper/trim, printf('%.3f') on
 doubles with no decimal-tie values, and no regexp_replace (global-flag
 semantics differ). Engine-specific fragments are parameterized per dialect.
+
+Registration: every query builder calls ``register_derived_views`` (or
+``load_testdata`` alone), and the views are registered once per Spark
+session and input signature (absolute directory, each table file's inode,
+size and mtime, and SPARK_GRAFT_INPUT_PARTITIONS). A repeat call with the
+same signature, while the views still exist, only pins the session time
+zone. The engine owns the view names it registers: the ten base tables
+(``TESTDATA_TABLES``, ``orders`` … ``embeddings``) and ``DERIVED_VIEWS``
+(``alkis_base``, ``alkis``, ``osm``, ``history``, ``carry_raw``,
+``docs_dup``, ``emb_dup``, ``polys``, ``images``).
 """
 
 from __future__ import annotations
+
+import os
+import weakref
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,6 +46,19 @@ TESTDATA_TABLES = (
     "events",
     "documents",
     "embeddings",
+)
+
+# Views register_derived_views creates over the base tables.
+DERIVED_VIEWS = (
+    "alkis_base",
+    "alkis",
+    "osm",
+    "history",
+    "carry_raw",
+    "docs_dup",
+    "emb_dup",
+    "polys",
+    "images",
 )
 
 # --------------------------------------------------------------------------
@@ -82,7 +109,12 @@ _ALKIS_HNR = """CASE CAST(okey % 17 AS INT)
   ELSE CAST(hnum AS STRING)
 END"""
 
-ALKIS_BASE_CTE = f"""alkis_base AS (
+
+def alkis_base_cte(src: str = "orders") -> str:
+    """The ``alkis_base`` CTE read from table ``src``. The default text is
+    the oracle's; the Spark view may read a re-split twin of ``orders``
+    (same row multiset)."""
+    return f"""alkis_base AS (
   SELECT
     okey,
     dnum,
@@ -99,9 +131,12 @@ ALKIS_BASE_CTE = f"""alkis_base AS (
     SELECT o_orderkey AS okey,
            CAST(o_custkey % 20 AS BIGINT) AS dnum,
            CAST(o_orderkey % 80 + 1 AS BIGINT) AS hnum
-    FROM orders
+    FROM {src}
   )
 )"""
+
+
+ALKIS_BASE_CTE = alkis_base_cte()
 
 ALKIS_CTE = """alkis AS (
   SELECT
@@ -320,20 +355,71 @@ EMB_DUP_SPARK_CTE = """emb_dup AS (
 # Registration / composition helpers
 # --------------------------------------------------------------------------
 
+@dataclass
+class _Registration:
+    key: tuple
+    tables: dict[str, DataFrame]
+    derived: bool = False
+
+
+# Session -> the input its views were last registered from. Keyed by the
+# session object, so a new or newSession() session registers its own views.
+_registered: weakref.WeakKeyDictionary[SparkSession, _Registration] = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def _input_key(sf_dir: str, n_parts: int) -> tuple | None:
+    """What the registered views are built from: the absolute directory,
+    (inode, size, mtime) of every table file (every file under a table
+    directory), and the re-split width. None when a table path cannot be
+    stat-ed, e.g. a non-local URI: such input is registered on every call."""
+    root = os.path.abspath(sf_dir)
+    stats = []
+    try:
+        for t in TESTDATA_TABLES:
+            path = os.path.join(root, f"{t}.parquet")
+            files = (sorted(os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs)
+                     if os.path.isdir(path) else [path])
+            for f in files:
+                st = os.stat(f)
+                stats.append((f, st.st_ino, st.st_size, st.st_mtime_ns))
+    except OSError:
+        return None
+    return root, tuple(stats), n_parts
+
+
+def _views_exist(spark: SparkSession, names) -> bool:
+    return all(spark.catalog.tableExists(v) for v in names)
+
+
 def load_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register the driver's parquet tables as temp views.
+    """Register the input parquet tables (``TESTDATA_TABLES``) as temp
+    views and return their DataFrames by name.
+
+    Registration happens once per session and input: a call whose session
+    already registered the same ``sf_dir`` with unchanged files (inode,
+    size, mtime) and the same SPARK_GRAFT_INPUT_PARTITIONS, and whose
+    views are all still in the catalog, pins the time zone and returns the
+    DataFrames of that registration, with no Spark job, read or view
+    creation. The engine owns these view names; a caller that replaces one
+    of them under the same session gets it back only when the input
+    changes or a view is dropped.
 
     The sandbox files are single-row-group parquet (one scan task no matter
     how many cores), which starves local[32]; SPARK_GRAFT_INPUT_PARTITIONS
     re-splits the fact tables after scan to emulate the many-split layout a
     real lake would have. Dimension-sized tables stay unsplit."""
-    import os
-
     # The driver's harness session may not pin a timezone; every derived
     # date (history, tpch filters) must match DuckDB's UTC-naive timestamps,
     # so pin it here at query-build time (runtime-settable conf).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     n_parts = int(os.environ.get("SPARK_GRAFT_INPUT_PARTITIONS", "0"))
+    key = _input_key(sf_dir, n_parts)
+    reg = _registered.get(spark)
+    if (key is not None and reg is not None and reg.key == key
+            and _views_exist(spark, TESTDATA_TABLES)):
+        return reg.tables
     # Re-split only the tables whose consumers run EXPENSIVE per-row map
     # work before the first shuffle (derived-CTE string/regex chains,
     # shingling, codecs, vector math) — there the round-robin exchange buys
@@ -366,47 +452,58 @@ def load_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
             df = df.repartition(n_parts, F.col(wide[t]))
         df.createOrReplaceTempView(t)
         dfs[t] = df
+    if key is None:
+        _registered.pop(spark, None)
+    else:
+        _registered[spark] = _Registration(key, dfs)
     return dfs
 
 
 def register_derived_views(spark: SparkSession, sf_dir: str) -> None:
-    """Materialize the derived tables as temp views in Spark (lazy plans)."""
-    import os
+    """Register the base tables (``load_testdata``) and the derived tables
+    as temp views in Spark (lazy plans).
 
+    The engine owns the view names: ``TESTDATA_TABLES`` (``orders`` …
+    ``embeddings``), ``alkis_base``, ``alkis``, ``osm``, ``history``,
+    ``carry_raw``, ``docs_dup``, ``emb_dup``, ``polys``, ``images`` (and
+    ``orders_resplit`` under SPARK_GRAFT_INPUT_PARTITIONS). Like the base
+    tables, the derived views are created once per session and input
+    signature: a repeat call creates them again only when the base tables
+    were re-registered or one of the views was dropped."""
     load_testdata(spark, sf_dir)
+    n_parts = int(os.environ.get("SPARK_GRAFT_INPUT_PARTITIONS", "0"))
+    views = DERIVED_VIEWS + (("orders_resplit",) if n_parts > 0 else ())
+    reg = _registered.get(spark)
+    if reg is not None and reg.derived and _views_exist(spark, views):
+        return
     # The alkis/osm derive chains (corrections → explodes → 15-step
     # normalize key) are the engine's most expensive per-row map work, so
     # THIS is where the input re-split earns its exchange: hash the narrow
     # orders scan on its unique key before the derivation fans out. The
-    # oracle-side ALKIS_BASE_CTE text is frozen (`FROM orders`); only the
-    # Spark view body swaps in the re-split twin — the row multiset is
-    # identical (repartition is a semantic no-op).
-    n_parts = int(os.environ.get("SPARK_GRAFT_INPUT_PARTITIONS", "0"))
-    alkis_base_src = ALKIS_BASE_CTE
+    # oracle-side ALKIS_BASE_CTE reads `orders`; only the Spark view reads
+    # the re-split twin — the row multiset is identical (repartition is a
+    # semantic no-op).
+    alkis_base_src = "orders"
     if n_parts > 0:
         spark.table("orders").repartition(
             n_parts, F.col("o_orderkey")
         ).createOrReplaceTempView("orders_resplit")
-        alkis_base_src = ALKIS_BASE_CTE.replace(
-            "FROM orders", "FROM orders_resplit"
-        )
-    spark.sql(f"CREATE OR REPLACE TEMP VIEW alkis_base AS WITH {alkis_base_src} SELECT * FROM alkis_base")
-    spark.sql(f"CREATE OR REPLACE TEMP VIEW alkis AS WITH {ALKIS_CTE} SELECT * FROM alkis")
-    spark.sql(f"CREATE OR REPLACE TEMP VIEW osm AS WITH {OSM_SPARK_CTE} SELECT * FROM osm")
-    spark.sql(f"CREATE OR REPLACE TEMP VIEW history AS WITH {HISTORY_CTE} SELECT * FROM history")
-    spark.sql(f"CREATE OR REPLACE TEMP VIEW carry_raw AS WITH {CARRY_RAW_CTE} SELECT * FROM carry_raw")
-    spark.sql(f"CREATE OR REPLACE TEMP VIEW docs_dup AS WITH {DOCS_DUP_SPARK_CTE} SELECT * FROM docs_dup")
-    spark.sql("CREATE OR REPLACE TEMP VIEW emb_dup AS WITH " + EMB_DUP_SPARK_CTE + " SELECT * FROM emb_dup")
-    spark.sql(f"CREATE OR REPLACE TEMP VIEW polys AS WITH {POLYS_CTE} SELECT * FROM polys")
-    for stmt in _split_images_views(images_spark_cte()):
-        spark.sql(stmt)
-
-
-def _split_images_views(cte_text: str) -> list[str]:
-    """Turn the 3-layer images CTE into stacked temp views for Spark."""
-    return [
-        "CREATE OR REPLACE TEMP VIEW images AS WITH " + cte_text + " SELECT * FROM images",
-    ]
+        alkis_base_src = "orders_resplit"
+    ctes = {
+        "alkis_base": alkis_base_cte(alkis_base_src),
+        "alkis": ALKIS_CTE,
+        "osm": OSM_SPARK_CTE,
+        "history": HISTORY_CTE,
+        "carry_raw": CARRY_RAW_CTE,
+        "docs_dup": DOCS_DUP_SPARK_CTE,
+        "emb_dup": EMB_DUP_SPARK_CTE,
+        "polys": POLYS_CTE,
+        "images": images_spark_cte(),
+    }
+    for name in DERIVED_VIEWS:
+        spark.sql(f"CREATE OR REPLACE TEMP VIEW {name} AS WITH {ctes[name]} SELECT * FROM {name}")
+    if reg is not None:
+        reg.derived = True
 
 
 def duckdb_with(*ctes: str) -> str:

@@ -671,11 +671,11 @@ def test_winnow_kernel_is_map_side(spark, sf_dir):
 
 def test_dedup_rows_single_scan(spark, sf_dir):
     """r6 session 3: the three counts are one aggregation pass — one scan
-    of the documents parquet behind the osm view, no join."""
+    of the orders parquet behind the osm view, no join."""
     from osm_coverage_spark import queries_misc
 
     df = queries_misc.q_dedup_rows(spark, sf_dir)
     plan = _plan(df)
     assert plan.count("orders.parquet") == 1, plan
-    assert "Join" not in plan or "CartesianProduct" not in plan
+    assert "Join" not in plan and "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
