@@ -188,15 +188,3 @@ def alkis_id_py(district: str, street: str, hnr: str,
     raw = f"{district}_{street}_{hnr}_{geo}"
     return hashlib.md5(raw.encode("utf-8")).hexdigest()[:12]
 
-
-def alkis_id_sql(district: str, street: str, hnr: str, lon: str, lat: str) -> str:
-    """DuckDB SQL for the same id (printf %.3f matches for non-tie values)."""
-    return (
-        "substr(md5("
-        f"coalesce(CAST({district} AS VARCHAR),'') || '_' || "
-        f"coalesce(CAST({street} AS VARCHAR),'') || '_' || "
-        f"coalesce(CAST({hnr} AS VARCHAR),'') || '_' || "
-        f"CASE WHEN {lon} IS NOT NULL AND {lat} IS NOT NULL "
-        f"THEN printf('%.3f_%.3f', {lon}, {lat}) ELSE 'no_geo' END"
-        "), 1, 12)"
-    )

@@ -6,7 +6,8 @@ The reference needs only "bucket points so nearby points share a key"
 ``scripts/04_compare_optimized.py:420-421``); BASELINE.json's north_rule asks
 for an H3/S2-indexed join/tiling layer. Since no h3 binding exists in this
 environment, we implement an equal-angle hierarchical grid with the same API
-shape (``cell(lat,lon,res)``, ``grid_disk(cell,k)``, ``polyfill`` via bbox):
+shape (``cell(lat,lon,res)``, ``grid_disk(cell,k)``; polygons are covered by
+their bbox cells in ``geo/pip.py``):
 
 - resolution ``r`` has cell edge ``360 / 2^r`` degrees,
 - cell id packs ``(r, ix=floor((lat+90)/sz), iy=floor((lon+180)/sz))`` into
@@ -146,21 +147,3 @@ GRID_DISK_SQL_JOINS = (
     "CROSS JOIN (SELECT unnest(generate_series(-{k}, {k})) AS _dy) _dys"
 )
 
-
-def bbox_polyfill_expr(lat_min: Column, lat_max: Column,
-                       lon_min: Column, lon_max: Column, res: int):
-    """Cover a bbox with cells at ``res`` → array of ids (explode to rows).
-
-    This is the polygon-polyfill primitive: polygons are first reduced to
-    their bbox (cheap, pure SQL); exact point-in-polygon refinement happens
-    after the candidate equi-join (geo/pip.py ray-cast Arrow UDF).
-    """
-    sz = F.lit(cell_size_deg(res))
-    ix0 = F.floor((lat_min + F.lit(90.0)) / sz).cast("long")
-    ix1 = F.floor((lat_max + F.lit(90.0)) / sz).cast("long")
-    iy0 = F.floor((lon_min + F.lit(180.0)) / sz).cast("long")
-    iy1 = F.floor((lon_max + F.lit(180.0)) / sz).cast("long")
-    base = F.lit(res).cast("long") * F.lit(R_BASE)
-    ix = F.explode(F.sequence(ix0, ix1)).alias("_pix")
-    iy = F.explode(F.sequence(iy0, iy1)).alias("_piy")
-    return base, ix, iy  # assembled by operators needing it

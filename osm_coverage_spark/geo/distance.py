@@ -5,8 +5,8 @@ The reference measures planar distance in EPSG:25832 meters
 is the engine's cheap default (agrees within ~0.3 % at the sub-km ranges
 the thresholds operate on); for exact reference semantics the
 ``utm25832`` backend (geo/crs.py — real Krüger-series projection, also
-pure column math) is selectable per query or via
-``SPARK_GRAFT_DIST_BACKEND``.
+pure column math) is selectable per query with ``dist_backend=`` on
+``operators/coverage.flag_found`` and ``coverage_pipeline``.
 """
 
 from __future__ import annotations

@@ -197,13 +197,6 @@ def _code_luts(bits, vals, n: int) -> tuple[np.ndarray, np.ndarray]:
     return ent
 
 
-def _pack_bits(values: np.ndarray, lengths: np.ndarray) -> bytes:
-    """Single-segment convenience wrapper around `_pack_bits_segments`."""
-    return _pack_bits_segments(
-        values, lengths, np.zeros(len(values), dtype=np.int64)
-    )[0]
-
-
 def _pack_bits_segments(
     values: np.ndarray, lengths: np.ndarray, seg: np.ndarray
 ) -> list[bytes]:

@@ -17,7 +17,6 @@ computed once and two exchanges total.
 
 from __future__ import annotations
 
-import os
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -41,11 +40,6 @@ DIST_BACKENDS = {
     "haversine": haversine_m,
     "utm25832": crs.planar_dist_m,
 }
-
-
-def _dist_fn(backend: str | None):
-    name = backend or os.environ.get("SPARK_GRAFT_DIST_BACKEND", "haversine")
-    return DIST_BACKENDS[name]
 
 
 def with_key(df: DataFrame, street: str = "street", hnr: str = "housenumber") -> DataFrame:
@@ -169,7 +163,7 @@ def flag_found(alkis: DataFrame, osm: DataFrame,
         alkis = alkis.repartition(F.col("key"))
         cond = F.col("key") == F.col("_okey")
 
-    dist = _dist_fn(dist_backend)
+    dist = DIST_BACKENDS[dist_backend or "haversine"]
     found = F.exists(
         F.col("_opts"),
         lambda p: dist(F.col("lat"), F.col("lon"), p["olat"], p["olon"])

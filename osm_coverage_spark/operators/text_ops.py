@@ -4,9 +4,7 @@ Training-data pipeline operators over a text column — all pure Catalyst
 higher-order functions (transform/filter/aggregate on arrays), no UDFs:
 
 - tokenization (whitespace + BPE-ish regex),
-- word n-gram shingles,
-- MinHash signatures (md5-based, engine-portable), LSH bands,
-- SimHash (md5-bit votes),
+- word n-gram shingles (as arrays, or as rows for the MinHash queries),
 - quality metrics (stopword ratio, word stats),
 - marker-word language id.
 
@@ -48,19 +46,6 @@ def shingles_expr(words: Column, n: int = 3) -> Column:
         ),
     )
     return F.when(F.size(words) >= n, joined)
-
-
-def minhash_expr(shingles: Column, seed: int) -> Column:
-    """One MinHash component: lexicographic min of seeded md5 hex digests.
-    Hex-string min is engine-portable (no 64-bit parsing needed)."""
-    return F.array_min(
-        F.transform(shingles, lambda s: F.md5(F.concat(F.lit(f"{seed}|"), s)))
-    )
-
-
-def fingerprint_expr(shingles: Column) -> Column:
-    """Winnowing-style document fingerprint: min shingle hash."""
-    return F.array_min(F.transform(shingles, F.md5))
 
 
 def stopword_count_expr(words: Column, stopwords=STOPWORDS) -> Column:

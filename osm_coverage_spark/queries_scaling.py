@@ -20,10 +20,10 @@ Two groups:
 Measurement rule: materialize through the `noop` sink — ``df.count()``
 lets Catalyst prune every computed column and times an empty plan.
 
-Amplification is a lazy ``explode(sequence(0, mult-1))`` replica column —
-same input files, ``mult``× rows, replica-jittered coordinates so densities
-stay constant (work scales linearly, like a larger SF from the same
-generator family).
+Amplification is generated, not read: ``spark.range`` over ``mult``× the
+sf0.1 row count with deterministic per-id formulas (``_points``,
+``_synth_address_cols``), so work scales linearly, like a larger SF from
+the same generator family.
 """
 
 from __future__ import annotations
@@ -33,16 +33,11 @@ from pyspark.sql import functions as F
 
 from .geo import cells
 from .geo.distance import haversine_m
-from .sources import derived
 
 
 def materialize(df: DataFrame) -> None:
     """Force full materialization of every output column (noop sink)."""
     df.write.mode("overwrite").format("noop").save()
-
-
-def _amplify(df: DataFrame, mult: int) -> DataFrame:
-    return df.withColumn("rep", F.explode(F.sequence(F.lit(0), F.lit(mult - 1))))
 
 
 def _points(spark: SparkSession, sf_dir: str, mult: int) -> DataFrame:
@@ -147,12 +142,12 @@ HOST_BURN = {
 # Amplified END-TO-END flagship job — the north_rule scaling evidence
 # ---------------------------------------------------------------------------
 
-def _synth_addresses(spark: SparkSession, n: int, parts: int = 512) -> DataFrame:
-    """Deterministic ALKIS-shaped table: streets with suffix variety (so the
-    normalize chain does real work), ~5 % range housenumbers (so expansion
-    fires), Germany-extent coordinates with a planted dense urban blob
-    (~10 % of rows in a 0.1° box — the hot-cell skew of the north_rule)."""
-    pid = F.col("id")
+def _synth_address_cols(pid: Column) -> tuple[Column, Column, Column, Column]:
+    """(street, housenumber, lat, lon) of synthetic address ``pid``: streets
+    with suffix variety (so the normalize chain does real work), ~5 % range
+    housenumbers (so expansion fires), Germany-extent coordinates with a
+    planted dense urban blob (~10 % of rows in a 0.1° box — the hot-cell
+    skew of the north_rule)."""
     h = (pid % 120 + 1).cast("long")
     street = F.concat(
         F.lit("Muster"),
@@ -171,6 +166,14 @@ def _synth_addresses(spark: SparkSession, n: int, parts: int = 512) -> DataFrame
     lon = F.when(
         urban, F.lit(6.95) + ((pid * 131) % 100000).cast("double") * 1e-6
     ).otherwise(F.lit(6.0) + ((pid * 131) % 8000000).cast("double") * 1e-6)
+    return street, hnr, lat, lon
+
+
+def _synth_addresses(spark: SparkSession, n: int, parts: int = 512) -> DataFrame:
+    """Deterministic ALKIS-shaped table: one ``_synth_address_cols`` row
+    per id, in 40 districts and 4 states."""
+    pid = F.col("id")
+    street, hnr, lat, lon = _synth_address_cols(pid)
     return spark.range(0, n, 1, parts).select(
         street.alias("street"),
         hnr.alias("housenumber"),
@@ -186,30 +189,12 @@ def _synth_addresses(spark: SparkSession, n: int, parts: int = 512) -> DataFrame
 def _synth_osm_from(spark: SparkSession, n_alkis: int, n_osm: int,
                     parts: int = 512) -> DataFrame:
     """OSM side derived from the ALKIS generator: each row re-derives an
-    ALKIS row's street/housenumber/coords (same formulas over the mapped
-    id), jitters coordinates ≤ ~15 m, and displaces every 3rd row ~1.1 km
-    so ~1/3 of addresses come out missing — a realistic coverage diff, not
-    a degenerate all-match or all-miss input."""
+    ALKIS row's street/housenumber/coords (``_synth_address_cols`` over the
+    mapped id), jitters coordinates ≤ ~15 m, and displaces every 3rd row
+    ~1.1 km so ~1/3 of addresses come out missing — a realistic coverage
+    diff, not a degenerate all-match or all-miss input."""
     j = F.col("id")
-    pid = (j * 7919) % n_alkis
-    h = (pid % 120 + 1).cast("long")
-    street = F.concat(
-        F.lit("Muster"),
-        ((pid * 2654435761) % 20000).cast("string"),
-        F.when(pid % 3 == 0, F.lit("straße"))
-        .when(pid % 3 == 1, F.lit(" Str."))
-        .otherwise(F.lit(" Weg")),
-    )
-    hnr = F.when(
-        pid % 20 == 0, F.concat(h.cast("string"), F.lit("-"), (h + 4).cast("string"))
-    ).otherwise(h.cast("string"))
-    urban = pid % 10 == 0
-    lat = F.when(
-        urban, F.lit(50.93) + ((pid * 173) % 100000).cast("double") * 1e-6
-    ).otherwise(F.lit(47.5) + ((pid * 173) % 7000000).cast("double") * 1e-6)
-    lon = F.when(
-        urban, F.lit(6.95) + ((pid * 131) % 100000).cast("double") * 1e-6
-    ).otherwise(F.lit(6.0) + ((pid * 131) % 8000000).cast("double") * 1e-6)
+    street, hnr, lat, lon = _synth_address_cols((j * 7919) % n_alkis)
     jitter_lat = ((j * 31) % 200 - 100).cast("double") * 1e-7
     jitter_lon = ((j * 37) % 200 - 100).cast("double") * 1e-7
     displaced = F.when(j % 3 == 0, F.lit(0.01)).otherwise(F.lit(0.0))
@@ -272,14 +257,10 @@ BOX_PROBES = {
 }
 
 
-def _pipeline_workload() -> dict:
+def pipeline_workload() -> dict:
     from . import registry
 
     return {
         name: registry.QUERIES[name]
         for name in ("coverage_missing", "knn_images", "phash_neardup")
     }
-
-
-def pipeline_workload() -> dict:
-    return _pipeline_workload()

@@ -8,8 +8,12 @@ explode except SimHash's token unpivot); every query has a DuckDB oracle.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
+from numpy.lib.stride_tricks import sliding_window_view
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from .operators import text_ops as T
 from .operators.skew import banded_self_pairs
@@ -439,8 +443,6 @@ def q_distinct_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes are engine-portable; < k distinct falls back to the exact
     count, the standard KMV small-set rule).
     """
-    import pandas as pd  # noqa: F401 — mapInPandas ships pandas batches
-
     docs = _docs(spark, sf_dir)
     grams = (
         docs.withColumn("w", T.words_expr(F.lower(F.col("text"))))
@@ -630,8 +632,6 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("e_t"),
         F.sqrt(_dot_fast(F.col("embedding"), F.col("embedding"))).alias("_nt"),
     )
-    from pyspark.sql import Window
-
     scored = (
         F.broadcast(queries)
         .crossJoin(targets)
@@ -938,10 +938,10 @@ FROM ranked WHERE rank <= {ANN_K}
 # substring of length >= w + k - 1 contributes a common fingerprint —
 # the "rolling hash" document-fingerprinting operator of the LLM-data
 # toolkit. The k-gram hash is a Karp-Rabin polynomial (base 131 mod
-# 2^31-1) over codepoints, written as ONE shared SQL text evaluated by
-# both Catalyst and DuckDB, so parity is by construction. Windows are a
-# ROWS frame min over (hash << 15 | pos) packed BIGINTs (ties break to
-# the leftmost position, deterministic both sides).
+# 2^31-1) over codepoints, with one weight table (_WINNOW_WTS) behind
+# both the DuckDB oracle's SQL and the Arrow kernel's int64 numpy.
+# Windows are a ROWS frame min over (hash * 2^20 + pos) packed BIGINTs
+# (ties break to the leftmost position, deterministic both sides).
 # --------------------------------------------------------------------------
 
 WINNOW_K = 8   # k-gram length (chars)
@@ -951,6 +951,8 @@ _WINNOW_M = 2147483647  # 2^31 - 1
 # (~1 MiB) keep pos out of the hash bits (r4 ADVICE: the old 2^15 field
 # overflowed past ~32K chars). hash < 2^31, so pack < 2^51 — BIGINT-safe.
 _WINNOW_POS_FIELD = 1048576  # 2^20
+# Karp-Rabin weight of the gram's i-th codepoint: 131^(K-1-i) mod M
+_WINNOW_WTS = [pow(131, WINNOW_K - 1 - i, _WINNOW_M) for i in range(WINNOW_K)]
 
 
 def _winnow_hash_sql() -> str:
@@ -958,8 +960,8 @@ def _winnow_hash_sql() -> str:
     (1-based substr), as dialect-shared SQL."""
     terms = [
         f"(CAST(ascii(substr(text, pos + {i + 1}, 1)) AS BIGINT) % {_WINNOW_M})"
-        f" * {pow(131, WINNOW_K - 1 - i, _WINNOW_M)} % {_WINNOW_M}"
-        for i in range(WINNOW_K)
+        f" * {wt} % {_WINNOW_M}"
+        for i, wt in enumerate(_WINNOW_WTS)
     ]
     return "(" + " + ".join(terms) + f") % {_WINNOW_M}"
 
@@ -969,64 +971,63 @@ def q_doc_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     return winnow(spark.table("documents"))
 
 
+def _winnow_minima(pdf):
+    """The winnowing kernel, per document of one Arrow batch: yields
+    ``(doc_id, mins)`` where ``mins`` are the packed (hash * 2^20 + pos)
+    minima of every ROWS window of ``_winnow_sketch_cte`` — the same
+    Karp-Rabin packs and window minima the DuckDB oracle computes, in int64
+    numpy (all intermediates < 2^52 — exact). Documents shorter than K
+    have no grams and yield nothing. ``mins`` is not yet deduplicated."""
+    wts = np.array(_WINNOW_WTS, dtype=np.int64)
+    k, w, m_mod, field = WINNOW_K, WINNOW_W, _WINNOW_M, _WINNOW_POS_FIELD
+    for did, text in zip(pdf["doc_id"], pdf["text"]):
+        if text is None or len(text) < k:
+            continue
+        # ascii(substr(text, i, 1)) == ord(text[i-1]) for any codepoint
+        cps = np.frombuffer(
+            text.encode("utf-32-le"), dtype=np.uint32
+        ).astype(np.int64)
+        g = (
+            (sliding_window_view(cps % m_mod, k) * wts[None, :]) % m_mod
+        ).sum(axis=1) % m_mod
+        n = len(g)
+        pack = g * field + np.arange(n, dtype=np.int64)
+        # suffix minima cover the tail windows that extend past the last
+        # gram (ROWS BETWEEN CURRENT AND w-1 FOLLOWING shrinks at the end
+        # of the partition)
+        suf = np.minimum.accumulate(pack[::-1])[::-1]
+        if n >= w:
+            full = sliding_window_view(pack, w).min(axis=1)
+            yield did, np.concatenate([full, suf[n - w + 1:]])
+        else:
+            yield did, suf
+
+
 def winnow(docs: DataFrame) -> DataFrame:
     """docs(doc_id, text) → winnowing sketch rows (doc_id, gram_pos,
     gram_hash). Any substring of length ≥ WINNOW_W + WINNOW_K − 1 shared
     by two documents contributes at least one common gram_hash.
 
-    r6: vectorized Arrow kernel (guide §4) — the SQL-window form
-    (``_winnow_window``, kept below as the oracle-shaped twin and proven
-    equal by ``tests/test_winnow_kernel.py``) explodes one row per gram
-    and pays a full shuffle+sort of the gram table just to run a per-doc
-    sliding min the doc's own row already contains. The kernel computes
-    the identical Karp-Rabin packs and window minima per document in
-    int64 numpy (all intermediates < 2^52 — exact), entirely map-side:
-    the gram-table exchange disappears from every sketch consumer
-    (doc_winnowing 2.19 → 0.78 s at the sf1.0 replica, same 2 343 114
-    rows; dedup_substring and decontaminate embed the same sketch)."""
-    from pyspark.sql.types import (IntegerType, LongType, StructField,
-                                   StructType)
-
+    r6: vectorized Arrow kernel (guide §4) — the SQL-window form the
+    DuckDB oracle states explodes one row per gram and pays a full
+    shuffle+sort of the gram table just to run a per-doc sliding min the
+    doc's own row already contains. ``_winnow_minima`` computes the
+    identical packs and window minima entirely map-side (proven equal to
+    the oracle by ``tests/test_winnow_kernel.py``): the gram-table
+    exchange disappears from every sketch consumer (doc_winnowing 2.19 →
+    0.78 s at the sf1.0 replica, same 2 343 114 rows; dedup_substring and
+    decontaminate embed the same sketch)."""
     schema = StructType([
         StructField("doc_id", LongType(), True),
         StructField("gram_pos", IntegerType(), True),
         StructField("gram_hash", LongType(), True),
     ])
-    src = docs.select("doc_id", "text")
-    k, w, m_mod, field = WINNOW_K, WINNOW_W, _WINNOW_M, _WINNOW_POS_FIELD
+    field = _WINNOW_POS_FIELD
 
     def kern(batches):
-        import numpy as np
-        import pandas as pd
-        from numpy.lib.stride_tricks import sliding_window_view
-
-        # ascii(substr(text, i, 1)) == ord(text[i-1]) for any codepoint
-        wts = np.array(
-            [pow(131, k - 1 - i, m_mod) for i in range(k)], dtype=np.int64
-        )
         for pdf in batches:
             ids_out, pos_out, hash_out = [], [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                if text is None or len(text) < k:
-                    continue
-                cps = np.frombuffer(
-                    text.encode("utf-32-le"), dtype=np.uint32
-                ).astype(np.int64)
-                g = (
-                    (sliding_window_view(cps % m_mod, k) * wts[None, :])
-                    % m_mod
-                ).sum(axis=1) % m_mod
-                n = len(g)
-                pack = g * field + np.arange(n, dtype=np.int64)
-                # suffix minima cover the tail windows that extend past
-                # the last gram (ROWS BETWEEN CURRENT AND w-1 FOLLOWING
-                # shrinks at the end of the partition)
-                suf = np.minimum.accumulate(pack[::-1])[::-1]
-                if n >= w:
-                    full = sliding_window_view(pack, w).min(axis=1)
-                    mins = np.concatenate([full, suf[n - w + 1:]])
-                else:
-                    mins = suf
+            for did, mins in _winnow_minima(pdf):
                 u = np.unique(mins)  # the SQL form's DISTINCT
                 ids_out.append(np.full(len(u), did, dtype=np.int64))
                 pos_out.append((u % field).astype(np.int32))
@@ -1038,53 +1039,30 @@ def winnow(docs: DataFrame) -> DataFrame:
                     "gram_hash": np.concatenate(hash_out),
                 })
 
-    return src.mapInPandas(kern, schema)
+    return docs.select("doc_id", "text").mapInPandas(kern, schema)
 
 
 def winnow_hashes(docs: DataFrame) -> DataFrame:
     """(doc_id, gram_hash) DISTINCT sketch rows — the shape both pair
     consumers (dedup_substring, decontaminate) immediately reduce the
-    full sketch to. Emitting per-doc unique hashes straight from the
-    kernel is GLOBALLY distinct (each doc lives in exactly one kernel
-    row), so the consumers' ``.distinct()`` exchange disappears
-    entirely — same row set, one less full shuffle."""
-    from pyspark.sql.types import LongType, StructField, StructType
+    full sketch to, i.e. ``winnow(docs)`` projected to (doc_id, gram_hash)
+    and deduplicated.
 
+    Precondition: ``doc_id`` is unique in ``docs``. Hashes are made
+    distinct per kernel row, so the output is GLOBALLY distinct only
+    because each doc lives in exactly one row; the consumers then drop
+    their ``.distinct()`` exchange — same row set, one less full shuffle.
+    Two rows sharing a doc_id would emit that doc's common hashes twice."""
     schema = StructType([
         StructField("doc_id", LongType(), True),
         StructField("gram_hash", LongType(), True),
     ])
-    src = docs.select("doc_id", "text")
-    k, w, m_mod, field = WINNOW_K, WINNOW_W, _WINNOW_M, _WINNOW_POS_FIELD
+    field = _WINNOW_POS_FIELD
 
     def kern(batches):
-        import numpy as np
-        import pandas as pd
-        from numpy.lib.stride_tricks import sliding_window_view
-
-        wts = np.array(
-            [pow(131, k - 1 - i, m_mod) for i in range(k)], dtype=np.int64
-        )
         for pdf in batches:
             ids_out, hash_out = [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                if text is None or len(text) < k:
-                    continue
-                cps = np.frombuffer(
-                    text.encode("utf-32-le"), dtype=np.uint32
-                ).astype(np.int64)
-                g = (
-                    (sliding_window_view(cps % m_mod, k) * wts[None, :])
-                    % m_mod
-                ).sum(axis=1) % m_mod
-                n = len(g)
-                pack = g * field + np.arange(n, dtype=np.int64)
-                suf = np.minimum.accumulate(pack[::-1])[::-1]
-                if n >= w:
-                    full = sliding_window_view(pack, w).min(axis=1)
-                    mins = np.concatenate([full, suf[n - w + 1:]])
-                else:
-                    mins = suf
+            for did, mins in _winnow_minima(pdf):
                 u = np.unique(mins // field)  # distinct HASHES per doc
                 ids_out.append(np.full(len(u), did, dtype=np.int64))
                 hash_out.append(u)
@@ -1094,36 +1072,7 @@ def winnow_hashes(docs: DataFrame) -> DataFrame:
                     "gram_hash": np.concatenate(hash_out),
                 })
 
-    return src.mapInPandas(kern, schema)
-
-
-def _winnow_window(docs: DataFrame) -> DataFrame:
-    """The r5 SQL-window winnowing form — the shape the frozen DuckDB
-    oracle text states. Kept as the equivalence reference for the Arrow
-    kernel above (tests/test_winnow_kernel.py runs both on planted edge
-    docs and the fixture corpus and asserts identical row sets)."""
-    grams = docs.filter(F.length("text") >= WINNOW_K).select(
-        "doc_id",
-        "text",
-        F.explode(
-            F.sequence(F.lit(0), F.length("text") - WINNOW_K)
-        ).alias("pos"),
-    )
-    pack = (
-        F.expr(_winnow_hash_sql()).cast("bigint") * _WINNOW_POS_FIELD
-        + F.col("pos")
-    ).alias("pack")
-    g = grams.select("doc_id", "pos", pack)
-    win = (
-        Window.partitionBy("doc_id").orderBy("pos")
-        .rowsBetween(0, WINNOW_W - 1)
-    )
-    sel = g.select("doc_id", F.min("pack").over(win).alias("m")).distinct()
-    return sel.select(
-        "doc_id",
-        (F.col("m") % _WINNOW_POS_FIELD).cast("int").alias("gram_pos"),
-        F.expr(f"m div {_WINNOW_POS_FIELD}").cast("bigint").alias("gram_hash"),
-    )
+    return docs.select("doc_id", "text").mapInPandas(kern, schema)
 
 
 def _winnow_sketch_cte(table: str) -> str:

@@ -28,15 +28,6 @@ def get_spark(
     builder = SparkSession.builder
     if master is not None:
         builder = builder.master(master)
-    # Scan split size: the sandbox parquet has ~13-25 MB row groups, so
-    # 16 MB splits align one scan task per row group (the finest
-    # parallelism parquet allows — a split without a row-group midpoint
-    # yields 0 rows). On a production lake with 128 MB-1 GB row groups the
-    # right value is 512 MB-1 GB (guide §6: fewer, larger map tasks);
-    # env-parameterised for that reason, only the local default is small.
-    max_part_bytes = os.environ.get(
-        "SPARK_GRAFT_MAX_PARTITION_BYTES", str(16 * 1024 * 1024)
-    )
     builder = (
         builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(n_shuffle))
@@ -56,7 +47,13 @@ def get_spark(
         # when the data actually pressures memory.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.files.maxPartitionBytes", max_part_bytes)
+        # Scan split size: the sandbox parquet has ~13-25 MB row groups, so
+        # 16 MB splits align one scan task per row group (the finest
+        # parallelism parquet allows — a split without a row-group midpoint
+        # yields 0 rows). On a production lake with 128 MB-1 GB row groups
+        # the right value is 512 MB-1 GB (guide §6: fewer, larger map
+        # tasks); pass it through ``extra_conf`` there.
+        .config("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
         # InferFiltersFromGenerate turns every explode() into a pushed
         # size(expr)>0 AND isnotnull(expr) pre-filter. For this engine's
         # explode chains the generator input is an expensive derived
@@ -76,17 +73,15 @@ def get_spark(
         # table per query. AQE additionally rewrites SMJ→SHJ at runtime
         # when every post-shuffle partition is under the local-map
         # threshold. Both are cluster-sane defaults (SHJ spills per
-        # partition); memory-constrained deployments can re-enable SMJ via
-        # env.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
+        # partition); memory-constrained deployments can re-enable SMJ with
+        # ``extra_conf={"spark.sql.join.preferSortMergeJoin": "true"}``.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCAL_MAP", str(64 * 1024 * 1024)),
+            str(64 * 1024 * 1024),
         )
     )
+    # applied after every default above, so any Spark conf can be overridden
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -2,7 +2,8 @@
 """Dump .explain('formatted') for headline queries to plans/<tag>/<name>_<suffix>.txt.
 
 Usage: python scripts/dump_plans.py <suffix> [query1,query2,...]
-Writes into plans/r06/. Uses $SPARK_GRAFT_SF_DIR (default sf0.1).
+Writes into plans/r06/, which is gitignored: plans are dumped on demand,
+never committed. Uses $SPARK_GRAFT_SF_DIR (default sf0.1).
 """
 from __future__ import annotations
 

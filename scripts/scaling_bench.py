@@ -37,11 +37,13 @@ import os
 import shutil
 import subprocess
 import sys
+import tempfile
 import time
+import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORKER = os.path.join(REPO, "scripts", "scaling_worker.py")
-ZIP = os.path.join(REPO, "dist", "osm_coverage_spark.zip")
+PKG = "osm_coverage_spark"
 
 N_EXEC, FOURN_EXEC = 2, 8
 CORES_PER_EXEC = 4
@@ -83,32 +85,53 @@ def host_capacity_mops(threads: int, per: int = 12_000_000) -> float:
     return round(best, 1)
 
 
+def build_pyfiles(dest_dir: str) -> str:
+    """Zip the package's ``.py`` files as they are in this tree into
+    ``dest_dir/osm_coverage_spark.zip``, the ``--py-files`` bundle, and
+    return its path. Members are the repo-relative paths, in sorted order."""
+    members = sorted(
+        os.path.relpath(os.path.join(root, f), REPO)
+        for root, _dirs, files in os.walk(os.path.join(REPO, PKG))
+        for f in files
+        if f.endswith(".py")
+    )
+    path = os.path.join(dest_dir, f"{PKG}.zip")
+    with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as z:
+        for m in members:
+            z.write(os.path.join(REPO, m), m)
+    return path
+
+
 def run_level(n_executors: int, sf_dir: str) -> dict:
     env = dict(os.environ)
     env["SPARK_GRAFT_CPUS"] = str(n_executors * CORES_PER_EXEC)
     env["SPARK_GRAFT_SF_DIR"] = sf_dir
     env.setdefault("SPARK_GRAFT_INPUT_PARTITIONS", "64")
     spark_submit = shutil.which("spark-submit")
-    if spark_submit and os.path.exists(ZIP):
-        env["SPARK_GRAFT_INHERIT_MASTER"] = "1"
-        cmd = [
-            spark_submit,
-            "--master", f"local-cluster[{n_executors},{CORES_PER_EXEC},6144]",
-            "--driver-memory", os.environ.get("SPARK_DRIVER_MEM", "8g"),
-            "--conf", f"spark.executor.memory={EXEC_MEM}",
-            # clamp per-JVM auxiliary thread pools: 8 executor JVMs each
-            # sizing GC/compiler pools for all 32 host cores oversubscribe
-            # the box in a way a real per-node deployment would not
-            "--conf",
-            "spark.executor.extraJavaOptions=-XX:ParallelGCThreads=4 "
-            "-XX:ConcGCThreads=2 -XX:ActiveProcessorCount=4",
-            "--py-files", ZIP,
-            WORKER,
-        ]
-    else:
-        cmd = [sys.executable, WORKER]
-        env["PYTHONPATH"] = REPO
-    out = subprocess.run(cmd, env=env, capture_output=True, text=True, check=True)
+    with tempfile.TemporaryDirectory() as tmp:
+        if spark_submit:
+            env["SPARK_GRAFT_INHERIT_MASTER"] = "1"
+            cmd = [
+                spark_submit,
+                "--master", f"local-cluster[{n_executors},{CORES_PER_EXEC},6144]",
+                "--driver-memory", os.environ.get("SPARK_DRIVER_MEM", "8g"),
+                "--conf", f"spark.executor.memory={EXEC_MEM}",
+                # clamp per-JVM auxiliary thread pools: 8 executor JVMs each
+                # sizing GC/compiler pools for all 32 host cores
+                # oversubscribe the box in a way a real per-node deployment
+                # would not
+                "--conf",
+                "spark.executor.extraJavaOptions=-XX:ParallelGCThreads=4 "
+                "-XX:ConcGCThreads=2 -XX:ActiveProcessorCount=4",
+                "--py-files", build_pyfiles(tmp),
+                WORKER,
+            ]
+        else:
+            cmd = [sys.executable, WORKER]
+            env["PYTHONPATH"] = REPO
+        out = subprocess.run(
+            cmd, env=env, capture_output=True, text=True, check=True
+        )
     line = [l for l in out.stdout.strip().splitlines() if l.startswith("{")][-1]
     sys.stderr.write(out.stderr[-1500:])
     return json.loads(line)
@@ -280,7 +303,7 @@ def main() -> None:
         f"(local-cluster mode, {CORES_PER_EXEC} cores × {EXEC_MEM} heap per",
         "executor JVM — separate heaps/GC/scheduling, the closest",
         "single-host analog of a real multi-executor cluster), launched via",
-        "`spark-submit --py-files dist/osm_coverage_spark.zip`.",
+        "`spark-submit --py-files` with the package zipped from the tree.",
         "Steady-state fastest-of-repeats after untimed warmups; results",
         "materialized through the `noop` sink so Catalyst cannot prune the",
         "measured work. All runs solo — nothing else on the box. Each",

@@ -1,9 +1,10 @@
 """One scaling-bench measurement at a fixed cluster size.
 
 Invoked via ``spark-submit --master local-cluster[E,4,6144] --conf
-spark.executor.memory=5g --py-files dist/osm_coverage_spark.zip`` by
-scripts/scaling_bench.py: E separate executor JVMs × 4 cores × 5g — the
-sandbox analog of an E-executor cluster. Runs four groups:
+spark.executor.memory=5g --py-files <bundle>`` by scripts/scaling_bench.py,
+which zips the package from the tree (``build_pyfiles``): E separate
+executor JVMs × 4 cores × 5g — the sandbox analog of an E-executor
+cluster. Runs four groups:
 
 - SCALING_E2E   — the amplified end-to-end flagship coverage diff (the
                   north_rule's unit of measure);
