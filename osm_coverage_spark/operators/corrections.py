@@ -34,10 +34,9 @@ RADIUS_DEG = 0.02  # geographic radius selector threshold (04:143)
 
 
 def ensure_correction_columns(df: DataFrame) -> DataFrame:
-    for c in CORRECTION_COLS:
-        if c not in df.columns:
-            df = df.withColumn(c, F.lit(None).cast("string"))
-    return df
+    have = set(df.columns)
+    missing = {c: F.lit(None).cast("string") for c in CORRECTION_COLS if c not in have}
+    return df.withColumns(missing) if missing else df
 
 
 def _collect_ref_points(df: DataFrame, corrections: list[dict[str, Any]]) -> dict[str, tuple[float, float]]:

@@ -17,9 +17,11 @@ computed once and two exchanges total.
 
 from __future__ import annotations
 
+import functools
+from collections.abc import Callable, Iterator, Mapping
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.normalize import normalize_key_expr
@@ -43,10 +45,13 @@ DIST_BACKENDS = {
 
 
 def with_key(df: DataFrame, street: str = "street", hnr: str = "housenumber") -> DataFrame:
-    """Null-coerce street/hnr to '' (04:362-368) and derive the match key."""
-    df = df.withColumn(street, F.coalesce(F.col(street).cast("string"), F.lit("")))
-    df = df.withColumn(hnr, F.coalesce(F.col(hnr).cast("string"), F.lit("")))
-    return df.withColumn("key", normalize_key_expr(F.col(street), F.col(hnr)))
+    """Null-coerce street/hnr to '' (04:362-368) and derive the match key,
+    in one projection (``normalize_key_expr`` coerces its inputs itself)."""
+    return df.withColumns({
+        street: F.coalesce(F.col(street).cast("string"), F.lit("")),
+        hnr: F.coalesce(F.col(hnr).cast("string"), F.lit("")),
+        "key": normalize_key_expr(F.col(street), F.col(hnr)),
+    })
 
 
 def prepare_alkis(
@@ -66,15 +71,9 @@ def prepare_osm(alkis_like_osm: DataFrame, aachen: bool = True) -> DataFrame:
     if aachen and "city" in osm.columns:
         osm = expand.expand_separators(osm)
     osm = expand.expand_ranges(osm)
-    osm = osm.withColumn("street", F.coalesce(F.col("street").cast("string"), F.lit("")))
-    osm = osm.withColumn(
-        "housenumber", F.coalesce(F.col("housenumber").cast("string"), F.lit(""))
-    )
     if "housename" in osm.columns:
         osm = expand.add_housename_variants(osm)
-    return osm.withColumn(
-        "key", normalize_key_expr(F.col("street"), F.col("housenumber"))
-    )
+    return with_key(osm)
 
 
 # res-16 cells: lat edge 611 m, lon edge >= 351 m below lat 55 — both >=
@@ -121,11 +120,11 @@ def flag_found(alkis: DataFrame, osm: DataFrame,
     blowup (shared street+number keys across a country: ~100-300 rows/key
     both sides → ~10^8 candidate pairs at sf0.1, ~10^12 at cluster scale)
     into O(rows × 4), at 2.25× less shuffle volume than a ring-1 explode."""
-    osm_sel = osm.select(
+    osm_cols = [
         F.col("key").alias("_okey"),
         F.col("lat").alias("_olat"),
         F.col("lon").alias("_olon"),
-    )
+    ]
     pt = F.struct(F.col("_olat").alias("olat"), F.col("_olon").alias("olon"))
     if use_cells:
         if max_dist_m > MATCH_STENCIL_MAX_M:
@@ -133,18 +132,15 @@ def flag_found(alkis: DataFrame, osm: DataFrame,
                 "the res-16 quadrant stencil is exact only to 175 m; use a "
                 f"coarser resolution for max_dist_m={max_dist_m}"
             )
-        osm_sel = disc_stencil(
-            osm_sel, "_olat", "_olon", MATCH_CELL_RES, out_col="_onbr"
-        )
+        stencil = disc_stencil(F.col("lat"), F.col("lon"), MATCH_CELL_RES)
+        osm_sel = osm.select(*osm_cols, F.explode(stencil).alias("_onbr"))
         # collect_list, not collect_set: exists() is duplicate-
         # insensitive, and the per-element set hashing measured 14% slower
         # than carrying the few duplicate points (sandbox: 2.68→2.36 s)
         osm_agg = osm_sel.groupBy("_okey", "_onbr").agg(
             F.collect_list(pt).alias("_opts")
         )
-        alkis = alkis.withColumn(
-            "_acell", cell_expr(F.col("lat"), F.col("lon"), MATCH_CELL_RES)
-        )
+        acell = cell_expr(F.col("lat"), F.col("lon"), MATCH_CELL_RES)
         # Explicit repartition on the join keys so the ALKIS prep chain
         # gets its OWN shuffle-map stage: a shuffled-hash join otherwise
         # fuses the stream side's derivation into the post-build probe
@@ -156,10 +152,12 @@ def flag_found(alkis: DataFrame, osm: DataFrame,
         # sf1.0. The partitioning equals the join requirement, so no extra
         # exchange is added — the fused plan's exchange just moves below
         # the join.
-        alkis = alkis.repartition(F.col("key"), F.col("_acell"))
-        cond = (F.col("key") == F.col("_okey")) & (F.col("_acell") == F.col("_onbr"))
+        alkis = alkis.repartition(F.col("key"), acell)
+        cond = (F.col("key") == F.col("_okey")) & (acell == F.col("_onbr"))
     else:
-        osm_agg = osm_sel.groupBy("_okey").agg(F.collect_list(pt).alias("_opts"))
+        osm_agg = osm.select(*osm_cols).groupBy("_okey").agg(
+            F.collect_list(pt).alias("_opts")
+        )
         alkis = alkis.repartition(F.col("key"))
         cond = F.col("key") == F.col("_okey")
 
@@ -169,37 +167,47 @@ def flag_found(alkis: DataFrame, osm: DataFrame,
         lambda p: dist(F.col("lat"), F.col("lon"), p["olat"], p["olon"])
         < F.lit(max_dist_m),
     )
-    return (
-        alkis.join(osm_agg, cond, "left")
-        .withColumn("found_in_osm", F.coalesce(found, F.lit(False)))
-        .drop("_okey", "_onbr", "_opts", "_acell")
+    return alkis.join(osm_agg, cond, "left").select(
+        alkis["*"], F.coalesce(found, F.lit(False)).alias("found_in_osm")
     )
+
+
+def _missing() -> Column:
+    """Unmatched and not 'ignored' (04:478-480)."""
+    return ~F.col("found_in_osm") & (
+        F.coalesce(F.col("correction_type"), F.lit("")) != "ignored"
+    )
+
+
+def _corrected() -> Column:
+    """Matched with a correction applied, or marked 'ignored'."""
+    ctype = F.col("correction_type")
+    return (F.col("found_in_osm") & ctype.isNotNull()) | (ctype == "ignored")
+
+
+def _coverage(total: str, digits: int) -> Column:
+    return F.when(F.col(total) == 0, F.lit(100.0)).otherwise(
+        F.round((F.col(total) - F.col("missing")) / F.col(total) * 100, digits)
+    )
+
+
+def _count_if(cond: Column) -> Column:
+    return F.sum(F.when(cond, 1).otherwise(0))
 
 
 def missing_rows(flagged: DataFrame) -> DataFrame:
-    """District-level missing set: unmatched and not 'ignored' (04:478-480)."""
-    return flagged.filter(
-        (~F.col("found_in_osm"))
-        & (F.coalesce(F.col("correction_type"), F.lit("")) != "ignored")
-    )
+    """District-level missing set (04:478-480)."""
+    return flagged.filter(_missing())
 
 
 def district_stats(flagged: DataFrame) -> DataFrame:
     """Per-district totals / missing / coverage / corrections (04:475-507)."""
-    not_found = ~F.col("found_in_osm")
-    not_ignored = F.coalesce(F.col("correction_type"), F.lit("")) != "ignored"
-    is_correction = (
-        F.col("correction_type").isNotNull() & F.col("found_in_osm")
-    ) | (F.col("correction_type") == "ignored")
     agg = flagged.groupBy("state", "district").agg(
         F.count(F.lit(1)).alias("total"),
-        F.sum(F.when(not_found & not_ignored, 1).otherwise(0)).alias("missing"),
-        F.sum(F.when(is_correction, 1).otherwise(0)).alias("corrections"),
+        _count_if(_missing()).alias("missing"),
+        _count_if(_corrected()).alias("corrections"),
     )
-    coverage = F.when(F.col("total") == 0, F.lit(100.0)).otherwise(
-        F.round((F.col("total") - F.col("missing")) / F.col("total") * 100, 1)
-    )
-    return agg.withColumn("coverage", coverage)
+    return agg.withColumn("coverage", _coverage("total", 1))
 
 
 def global_stats(flagged: DataFrame, osm_count_col_name: str = "osm") -> DataFrame:
@@ -209,19 +217,10 @@ def global_stats(flagged: DataFrame, osm_count_col_name: str = "osm") -> DataFra
     """
     agg = flagged.groupBy("state").agg(
         F.count(F.lit(1)).alias("alkis"),
-        F.sum(F.when(~F.col("found_in_osm"), 1).otherwise(0)).alias("missing"),
-        F.sum(
-            F.when(
-                (F.col("correction_type").isNotNull() & F.col("found_in_osm"))
-                | (F.col("correction_type") == "ignored"),
-                1,
-            ).otherwise(0)
-        ).alias("corrections"),
+        _count_if(~F.col("found_in_osm")).alias("missing"),
+        _count_if(_corrected()).alias("corrections"),
     )
-    coverage = F.when(F.col("alkis") == 0, F.lit(100.0)).otherwise(
-        F.round((F.col("alkis") - F.col("missing")) / F.col("alkis") * 100, 2)
-    )
-    return agg.withColumn("coverage", coverage)
+    return agg.withColumn("coverage", _coverage("alkis", 2))
 
 
 def rollup_stats(flagged: DataFrame) -> DataFrame:
@@ -231,48 +230,54 @@ def rollup_stats(flagged: DataFrame) -> DataFrame:
     Computed as a rollup over the per-(state, district) PARTIAL sums —
     counts/sums are associative, so rolling up the ~|districts| partial rows
     is exact and avoids re-scanning the raw rows for each grouping level."""
-    not_found = ~F.col("found_in_osm")
-    not_ignored = F.coalesce(F.col("correction_type"), F.lit("")) != "ignored"
     partial = flagged.groupBy("state", "district").agg(
         F.count(F.lit(1)).alias("_t"),
-        F.sum(F.when(not_found & not_ignored, 1).otherwise(0)).alias("_m"),
+        _count_if(_missing()).alias("_m"),
     )
     return (
         partial.rollup("state", "district")
         .agg(F.sum("_t").alias("total"), F.sum("_m").alias("missing"))
-        .withColumn(
-            "coverage",
-            F.when(F.col("total") == 0, F.lit(100.0)).otherwise(
-                F.round((F.col("total") - F.col("missing")) / F.col("total") * 100, 1)
-            ),
-        )
+        .withColumn("coverage", _coverage("total", 1))
     )
+
+
+EXPORT_COLS = (
+    "street", "housenumber", "lon", "lat", "matched", "correction_type",
+    "correction_comment", "original_street", "original_housenumber",
+    "alkis_id", "district", "state",
+)
 
 
 def export_rows(flagged: DataFrame) -> DataFrame:
     """Per-district GeoJSON-shaped export: missing rows (matched=false) plus
-    corrected-or-ignored rows (matched=true) — 04:581-608."""
+    corrected-or-ignored rows (matched=true) — 04:581-608.
+
+    One filter over ``flagged``, not a union of two: a union plans the whole
+    ``flag_found`` subtree (scans, prep chains, join) once per branch. The
+    two sets are disjoint (missing needs ``¬found ∧ type≠'ignored'``), so a
+    kept row is corrected exactly when it is not missing."""
     flagged = ensure_correction_columns(flagged)
-    miss = missing_rows(flagged).withColumn("matched", F.lit(False))
-    corrected = flagged.filter(
-        (F.col("found_in_osm") & F.col("correction_type").isNotNull())
-        | (F.col("correction_type") == "ignored")
-    ).withColumn("matched", F.lit(True))
-    cols = [
-        "street",
-        "housenumber",
-        "lon",
-        "lat",
-        "matched",
-        "correction_type",
-        "correction_comment",
-        "original_street",
-        "original_housenumber",
-        "alkis_id",
-        "district",
-        "state",
-    ]
-    return miss.select(cols).unionByName(corrected.select(cols))
+    corrected = _corrected()
+    matched = F.coalesce(corrected, F.lit(False)).alias("matched")
+    return flagged.filter(_missing() | corrected).select(
+        *[matched if c == "matched" else c for c in EXPORT_COLS]
+    )
+
+
+class _Lazy(Mapping[str, DataFrame]):
+    """Read-only mapping whose values are built on first access, once."""
+
+    def __init__(self, **build: Callable[[], DataFrame]):
+        self._build = {name: functools.cache(f) for name, f in build.items()}
+
+    def __getitem__(self, name: str) -> DataFrame:
+        return self._build[name]()
+
+    def __iter__(self) -> Iterator[str]:
+        return iter(self._build)
+
+    def __len__(self) -> int:
+        return len(self._build)
 
 
 def coverage_pipeline(
@@ -282,18 +287,23 @@ def coverage_pipeline(
     aachen: bool = True,
     max_dist_m: float = MATCH_DIST_M,
     dist_backend: str | None = None,
-) -> dict[str, DataFrame]:
-    """End-to-end lazy composition; callers pick which outputs to execute."""
-    a = prepare_alkis(alkis, corrections, aachen)
-    o = prepare_osm(osm, aachen)
-    flagged = flag_found(a, o, max_dist_m, dist_backend=dist_backend)
-    return {
-        "alkis_prepared": a,
-        "osm_prepared": o,
-        "flagged": flagged,
-        "missing": missing_rows(flagged),
-        "district_stats": district_stats(flagged),
-        "global_stats": global_stats(flagged),
-        "rollup_stats": rollup_stats(flagged),
-        "export": export_rows(flagged),
-    }
+) -> Mapping[str, DataFrame]:
+    """End-to-end lazy composition. The eight outputs are built on first
+    access, each once: reading ``out["export"]`` builds the prep chains,
+    ``flagged`` and the export only, and every output shares one
+    ``flagged``. Building a DataFrame runs no Spark job, but it costs
+    driver-side analysis; callers pick which outputs to read and execute."""
+    out = _Lazy(
+        alkis_prepared=lambda: prepare_alkis(alkis, corrections, aachen),
+        osm_prepared=lambda: prepare_osm(osm, aachen),
+        flagged=lambda: flag_found(
+            out["alkis_prepared"], out["osm_prepared"], max_dist_m,
+            dist_backend=dist_backend,
+        ),
+        missing=lambda: missing_rows(out["flagged"]),
+        district_stats=lambda: district_stats(out["flagged"]),
+        global_stats=lambda: global_stats(out["flagged"]),
+        rollup_stats=lambda: rollup_stats(out["flagged"]),
+        export=lambda: export_rows(out["flagged"]),
+    )
+    return out

@@ -48,11 +48,7 @@ def expand_ranges(df: DataFrame, hnr_col: str = "housenumber") -> DataFrame:
         .when(is_range, F.array().cast("array<string>"))  # inverted → drop
         .otherwise(F.array(hnr))
     )
-    return (
-        df.withColumn("_parts", parts)
-        .withColumn(hnr_col, F.explode("_parts"))
-        .drop("_parts")
-    )
+    return df.withColumn(hnr_col, F.explode(parts))
 
 
 def expand_separators(
@@ -79,11 +75,7 @@ def expand_separators(
         lambda x: x != "",
     )
     parts = F.when(applies, split_parts).otherwise(F.array(F.col(hnr_col)))
-    return (
-        df.withColumn("_parts", parts)
-        .withColumn(hnr_col, F.explode("_parts"))
-        .drop("_parts")
-    )
+    return df.withColumn(hnr_col, F.explode(parts))
 
 
 def add_housename_variants(
@@ -93,8 +85,7 @@ def add_housename_variants(
 ) -> DataFrame:
     """Emit rows carrying a housename twice — once as-is and once with a
     ``"<hnr>, <housename>"`` variant — so either form can match
-    (04:371-384). Housenumber is assumed already null-coerced to '' (the
-    pipeline does this first, like 04:368).
+    (04:371-384). The housenumber is null-coerced to '' first, like 04:368.
 
     r6: explode form instead of ``df.unionByName(df.filter(...))`` — the
     union duplicated the ENTIRE upstream subtree (Catalyst plans each
@@ -102,16 +93,11 @@ def add_housename_variants(
     §2.4); the explode derives the identical row multiset from one pass.
     """
     hn = F.col(housename_col)
-    base = F.array(F.col(hnr_col))
+    hnr = F.coalesce(F.col(hnr_col).cast("string"), F.lit(""))
     variants = F.when(
-        hn.isNotNull() & (hn != ""),
-        F.array(F.col(hnr_col), F.concat(F.col(hnr_col), F.lit(", "), hn)),
-    ).otherwise(base)
-    return (
-        df.withColumn("_hn_parts", variants)
-        .withColumn(hnr_col, F.explode("_hn_parts"))
-        .drop("_hn_parts")
-    )
+        hn.isNotNull() & (hn != ""), F.array(hnr, F.concat(hnr, F.lit(", "), hn))
+    ).otherwise(F.array(hnr))
+    return df.withColumn(hnr_col, F.explode(variants))
 
 
 def carry_forward_split(

@@ -59,11 +59,9 @@ def q_expand_separators(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_housename_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     derived.register_derived_views(spark, sf_dir)
-    osm = _osm(spark)
-    osm = osm.withColumn(
-        "housenumber", F.coalesce(F.col("housenumber").cast("string"), F.lit(""))
+    return expand.add_housename_variants(_osm(spark)).select(
+        "street", "housenumber", "city"
     )
-    return expand.add_housename_variants(osm).select("street", "housenumber", "city")
 
 
 def q_coverage_missing(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1342,18 +1342,23 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document context-chunk spans: (doc_id, lang, shard, chunk,
     pos0, seg_tok) — doc's tokens occupy [pos0, pos0+seg_tok) of chunk
     ``chunk`` in its (lang, shard) stream. sum(seg_tok) == total tokens;
-    every chunk except a stream's last is exactly PACK_L full."""
+    every chunk except a stream's last is exactly PACK_L full.
+
+    A token is a non-empty word. Documents without one (empty or blank
+    text) are dropped before chunking: they occupy no chunk, and a
+    zero-token span at a chunk boundary would make ``sequence(first_c,
+    first_c - 1)`` count down into two phantom chunks."""
     derived.register_derived_views(spark, sf_dir)
     docs = spark.table("documents")
     shard_hex = "md5(concat('pack|', CAST(doc_id AS STRING)))"
     d = docs.select(
         "doc_id",
         "lang",
-        F.size(T.words_expr(F.col("text"))).cast("long").alias("ntok"),
+        F.size(F.array_remove(T.words_expr(F.col("text")), "")).cast("long").alias("ntok"),
         (F.expr(hexn_to_bigint(shard_hex, 4, "spark")) % PACK_SHARDS)
         .cast("int")
         .alias("shard"),
-    )
+    ).filter(F.col("ntok") > 0)
     w = (
         Window.partitionBy("lang", "shard")
         .orderBy("doc_id")
@@ -1385,7 +1390,7 @@ _PACK_SHARD_DUCK = hexn_to_bigint(
 ORACLE["pack_sequences"] = f"""
 WITH base AS (
   SELECT doc_id, lang,
-         CAST(len({_WORDS}) AS BIGINT) AS ntok,
+         CAST(len(list_filter({_WORDS}, x -> x <> '')) AS BIGINT) AS ntok,
          CAST({_PACK_SHARD_DUCK} % {PACK_SHARDS} AS INT) AS shard
   FROM documents
 ),
@@ -1396,6 +1401,7 @@ cum AS (
            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
          ) AS BIGINT) AS end_tok
   FROM base
+  WHERE ntok > 0
 ),
 span AS (
   SELECT doc_id, lang, shard, end_tok, end_tok - ntok AS start_tok,

@@ -18,7 +18,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     inherit = os.environ.get("SPARK_GRAFT_INHERIT_MASTER") == "1"
     master = None if inherit else (master or f"local[{cpus}]")
     # In local[N] the shuffle width should track N; on a cluster it tracks
@@ -47,6 +47,19 @@ def get_spark(
         # when the data actually pressures memory.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        # No per-call origin capture. PySpark 4.1 wraps every
+        # ``functions.*`` call and Column method in ``_with_origin``, which
+        # records the Python call site: about five Py4J round trips and a
+        # stack walk per Column built (4-vCPU host: ``F.col`` 1.5 → 0.6 ms,
+        # ``cells.disc_stencil`` 49 → 17 ms with it off). A coverage
+        # query builds thousands of Columns, so building its plan cost about
+        # as much as running it. The trade: a runtime error's query context
+        # no longer names the Python ``file:line`` that built the failing
+        # expression. PySpark reads the flag once per process, from the
+        # first session active when a Column is built
+        # (``pyspark.errors.utils._enable_debugging_cache``), so
+        # ``extra_conf`` turns it back on only in a fresh process.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # Scan split size: the sandbox parquet has ~13-25 MB row groups, so
         # 16 MB splits align one scan task per row group (the finest
         # parallelism parquet allows — a split without a row-group midpoint

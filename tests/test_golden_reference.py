@@ -3,6 +3,8 @@ pure-Python implementation of the reference's compare semantics
 (FIXTURES.md F1/F2/F3 edge-case fixtures; bit-for-bit on keys —
 the north_star requirement)."""
 
+from collections import Counter
+
 from pyspark.sql import functions as F
 
 from osm_coverage_spark.operators import coverage
@@ -72,6 +74,25 @@ def test_golden_end_to_end_with_corrections(spark):
     # the ignore correction must remove its rows from district missing
     ignored = out["flagged"].filter(F.col("correction_type") == "ignored").count()
     assert ignored > 0
+
+
+def test_export_equals_missing_union_corrected(spark):
+    """The single-filter export keeps the union definition: missing rows
+    with matched=false plus corrected-or-ignored rows with matched=true."""
+    out, _ = _run_pipeline(spark, corrections=fixtures.CORRECTIONS)
+    flagged = out["flagged"]
+    ctype = F.col("correction_type")
+    missing = ~F.col("found_in_osm") & (F.coalesce(ctype, F.lit("")) != "ignored")
+    corrected = (F.col("found_in_osm") & ctype.isNotNull()) | (ctype == "ignored")
+    cols = list(coverage.EXPORT_COLS)
+    want = flagged.filter(missing).withColumn("matched", F.lit(False)).select(cols).unionByName(
+        flagged.filter(corrected).withColumn("matched", F.lit(True)).select(cols)
+    )
+    got = out["export"]
+    assert got.columns == cols
+    rows = Counter(tuple(r) for r in got.collect())
+    assert rows == Counter(tuple(r) for r in want.collect())
+    assert {r[cols.index("matched")] for r in rows} == {False, True}
 
 
 def test_flag_found_cell_path_equals_plain_key_join(spark):

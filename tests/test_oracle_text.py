@@ -1,8 +1,15 @@
 """Driver-gate replica for the text/dedup/ANN query family."""
 
+import hashlib
+import os
+import shutil
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from osm_coverage_spark import queries_text as qt
+from osm_coverage_spark.sources import derived
 from tests.oracle_utils import check_query
 
 
@@ -101,3 +108,41 @@ def test_pack_sequences_invariants(spark, sf_dir):
         for lo, hi in segs:
             assert lo == pos
             pos = hi
+
+
+def _pack_shard(doc_id: int) -> int:
+    digest = hashlib.md5(f"pack|{doc_id}".encode()).hexdigest()
+    return int(digest[:4], 16) % qt.PACK_SHARDS
+
+
+def test_pack_sequences_drops_zero_token_documents(spark, sf_dir, tmp_path):
+    """Documents without a token occupy no chunk, on both sides. Planted in
+    one stream of their own: a 64-token document, then an empty text whose
+    span starts exactly on the chunk boundary (where sequence(1, 0) would
+    count down into two phantom chunks), then a blank one mid-chunk."""
+    data = str(tmp_path / "sf")
+    shutil.copytree(sf_dir, data)
+    path = os.path.join(data, "documents.parquet")
+    docs = pq.read_table(path)
+    ids = [i for i in range(30_000_000, 30_000_100) if _pack_shard(i) == 0][:5]
+    texts = [" ".join(["w"] * qt.PACK_L), "", "x " * 10, "   ", "y z"]
+    planted = pa.table({
+        "doc_id": pa.array(ids, pa.int64()),
+        "text": texts,
+        "lang": ["zz"] * 5,
+        "source": ["planted"] * 5,
+        "n_chars": pa.array([len(t) for t in texts], pa.int64()),
+    }).cast(docs.schema)
+    os.chmod(path, 0o644)
+    pq.write_table(pa.concat_tables([docs, planted]), path)
+    try:
+        problems = check_query(spark, data, qt.q_pack_sequences, qt.ORACLE["pack_sequences"])
+        assert not problems, "; ".join(problems)
+        out = qt.q_pack_sequences(spark, data).toPandas()
+    finally:
+        derived.register_derived_views(spark, sf_dir)
+    assert (out.seg_tok > 0).all()
+    zz = out[out.lang == "zz"].sort_values(["doc_id", "chunk"])
+    assert list(zip(zz.doc_id, zz.chunk, zz.pos0, zz.seg_tok)) == [
+        (ids[0], 0, 0, qt.PACK_L), (ids[2], 1, 0, 10), (ids[4], 1, 10, 2),
+    ]

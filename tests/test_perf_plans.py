@@ -6,8 +6,8 @@ from pyspark.sql import functions as F
 
 from osm_coverage_spark import queries_coverage, queries_tpch
 from osm_coverage_spark.geo import cells
-from osm_coverage_spark.operators import skew
-from osm_coverage_spark.sources import derived
+from osm_coverage_spark.operators import coverage, skew
+from osm_coverage_spark.sources import derived, fixtures
 
 
 def _plan(df) -> str:
@@ -45,6 +45,79 @@ def test_flagship_is_single_aggregated_left_join(spark, sf_dir):
     assert "collect_list" in plan  # aggregated build side
     # each side's prep chain runs once: one orders scan per side
     assert plan.count("orders.parquet") == 2, plan
+
+
+def test_export_with_corrections_plans_the_join_once(spark, sf_dir):
+    """The export is one filter over ``flagged``: with corrections applied
+    (so the corrected set cannot fold to empty) the match join and each
+    side's orders scan appear once, not once per union branch."""
+    derived.register_derived_views(spark, sf_dir)
+    out = coverage.coverage_pipeline(
+        spark.table("alkis"), spark.table("osm"), corrections=fixtures.CORRECTIONS
+    )
+    plan = _plan(out["export"])
+    joins = ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin")
+    assert sum(plan.count(j) for j in joins) == 1, plan
+    assert plan.count("orders.parquet") == 2, plan
+
+
+def _count_dataframes(monkeypatch) -> list:
+    """Record every DataFrame the driver creates. Classic PySpark's
+    ``DataFrame.__new__`` calls ``__init__`` and Python calls it once more,
+    so frames are told apart by identity (the list keeps them alive, so no
+    id is reused)."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    made = []
+    init = DataFrame.__init__
+
+    def recording(self, *args, **kwargs):
+        made.append(self)
+        init(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "__init__", recording)
+    return made
+
+
+def _spy(monkeypatch, name: str) -> list[int]:
+    calls = [0]
+    fn = getattr(coverage, name)
+
+    def spy(*args, **kwargs):
+        calls[0] += 1
+        return fn(*args, **kwargs)
+
+    monkeypatch.setattr(coverage, name, spy)
+    return calls
+
+
+def test_export_builds_few_dataframes_and_nothing_unread(spark, sf_dir, monkeypatch):
+    """Each coverage operator is one projection, and only what the export
+    reads is built (15 DataFrames)."""
+    derived.register_derived_views(spark, sf_dir)
+    alkis, osm = spark.table("alkis"), spark.table("osm")
+    unread = {k: _spy(monkeypatch, k)
+              for k in ("district_stats", "global_stats", "rollup_stats", "missing_rows")}
+    made = _count_dataframes(monkeypatch)
+    out = coverage.coverage_pipeline(alkis, osm)
+    assert not made  # nothing is built before an output is read
+    export = out["export"]
+    assert 0 < len({id(df) for df in made}) <= 16
+    assert export.columns == list(coverage.EXPORT_COLS)
+    assert all(c == [0] for c in unread.values()), unread
+    assert sorted(out) == sorted([
+        "alkis_prepared", "osm_prepared", "flagged", "missing",
+        "district_stats", "global_stats", "rollup_stats", "export",
+    ])
+
+
+def test_pipeline_outputs_share_one_flagged(spark, sf_dir, monkeypatch):
+    derived.register_derived_views(spark, sf_dir)
+    flag = _spy(monkeypatch, "flag_found")
+    out = coverage.coverage_pipeline(spark.table("alkis"), spark.table("osm"))
+    missing, stats = out["missing"], out["district_stats"]
+    assert out["missing"] is missing and out["district_stats"] is stats
+    assert flag == [1]
 
 
 def test_tpch_fact_tables_not_hint_broadcast(spark, sf_dir):
